@@ -34,8 +34,8 @@ import sys  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUP_REPS = 3
 DEFAULT_SEED = 1
+PREFIX_REPS = 3  # one timing of a 0.3 s prefix can give a negative self time
 
 
 def parse_args(argv):
@@ -74,11 +74,9 @@ def start_session(work: str, cores: int):
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "2g")
-        # C1 only: on 4 cores a fresh JVM's C2 compiler threads take about
-        # half the CPU of a one-minute run and make its timings erratic. No
-        # hsperfdata under /tmp; JVM scratch files inside the work dir.
+        # no hsperfdata under /tmp; JVM scratch files inside the work dir
         .config("spark.driver.extraJavaOptions",
-                "-XX:+UseParallelGC -XX:TieredStopAtLevel=1 "
+                "-XX:+UseParallelGC "
                 f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}")
         .config("spark.local.dir", local)
         .config("spark.sql.warehouse.dir", os.path.join(work, "warehouse"))
@@ -119,12 +117,15 @@ def timed_rounds(workload, tracer, seconds: float) -> tuple[list, float, int]:
             return records, wall, rounds
 
 
-def operator_prefixes(spark, workload, tracer) -> dict:
+def operator_prefixes(spark, workload) -> dict:
     """Time the lazy operators by writing three cumulative prefixes of
     replay's operator chain to the noop sink: decode, + assembly (with the
     multi-row unnest), + net-change. Self time is the difference between
-    consecutive prefixes. Runs on the first timed batch's input."""
+    consecutive prefixes. Runs on the first timed batch's input, PREFIX_REPS
+    times; each counter is the median over the repetitions."""
     from pyspark.sql import Observation, functions as F
+
+    from tracer import OPERATOR_SPANS, SPAN_FIELDS, Tracer
 
     from openlogreplicator_spark.operators.decode import (
         apply_start_position, decode_events, unnest_multirow,
@@ -142,30 +143,35 @@ def operator_prefixes(spark, workload, tracer) -> dict:
     dml = decode_events(events, cfg).where(F.col("op") != "DDL").select(*proj)
     assembled = unnest_multirow(assemble(dml, cfg))
     lww = net_changes(assembled, list(cfg.key_cols), list(cfg.payload_cols))
-    rows = {}
-    for name, df in (("operators.decode", dml),
-                     ("operators.assembly", assembled),
-                     ("operators.lww", lww)):
-        obs = Observation()
-        with tracer.span(name):
-            (df.observe(obs, F.count(F.lit(1)).alias("n"))
-             .write.format("noop").mode("overwrite").save())
-        rows[name] = obs.get["n"]
-    t = tracer.totals
-    for inner, outer in (("operators.decode", "operators.assembly"),
-                         ("operators.assembly", "operators.lww")):
-        t[outer]["self_s"] = t[outer]["s"] - t[inner]["s"]
-    return {
-        "operators.assembly.committed_per_event":
-            rows["operators.assembly"] / n_events,
-        "operators.lww.keys_per_event": rows["operators.lww"] / n_events,
-    }
+    rows, reps = {}, []
+    for _ in range(PREFIX_REPS):
+        tracer = Tracer(spark)
+        tracer.enabled = True
+        for name, df in zip(OPERATOR_SPANS, (dml, assembled, lww)):
+            obs = Observation()
+            with tracer.span(name):
+                (df.observe(obs, F.count(F.lit(1)).alias("n"))
+                 .write.format("noop").mode("overwrite").save())
+            rows[name] = obs.get["n"]
+        t = tracer.totals
+        for inner, outer in zip(OPERATOR_SPANS, OPERATOR_SPANS[1:]):
+            t[outer]["self_s"] = t[outer]["s"] - t[inner]["s"]
+        reps.append(t)
+    out = {f"{s}.{f}": statistics.median(t[s][f] for t in reps)
+           for s in OPERATOR_SPANS for f in SPAN_FIELDS}
+    out["operators.assembly.committed_per_event"] = (
+        rows["operators.assembly"] / n_events)
+    out["operators.lww.keys_per_event"] = rows["operators.lww"] / n_events
+    return out
 
 
-def summary_table(metrics: dict, units: dict, extra: list) -> str:
+def summary_table(metrics: dict, units: dict, counts: dict,
+                  extra: list) -> str:
+    """One line per metric; a median carries its sample count."""
     lines = [f"{'metric':<48} {'value':>14}  unit"]
     for k, v in metrics.items():
-        lines.append(f"{k:<48} {v:>14.6g}  {units[k]}")
+        n = f"  (n={counts[k]})" if k in counts else ""
+        lines.append(f"{k:<48} {v:>14.6g}  {units[k]}{n}")
     for k, v, u in extra:
         lines.append(f"{k:<48} {v:>14.6g}  {u}")
     return "\n".join(lines)
@@ -190,9 +196,7 @@ def main(argv=None) -> int:
         spark = start_session(work, cores)
         session_s = time.perf_counter() - T_START
 
-        from tracer import (
-            OPERATOR_SPANS, SPAN_FIELDS, Tracer, per_layer_names,
-        )
+        from tracer import SPAN_FIELDS, Tracer, per_layer_names
         from workloads import WORKLOADS
 
         tracer = Tracer(spark)
@@ -200,24 +204,21 @@ def main(argv=None) -> int:
             tracer.install()
         workload = WORKLOADS[args.workload](spark, args.seed, work)
 
-        rep_s = []
-        for rep in range(SETUP_REPS):
-            t0 = time.perf_counter()
-            workload.prepare(rep)
-            rep_s.append(time.perf_counter() - t0)
+        t0 = time.perf_counter()
+        workload.prepare()
+        prepare_s = time.perf_counter() - t0
         # no timed batch writes into an empty table: a traced run takes
         # lake.merge_direct from the bootstrap, then starts afresh
         tracer.enabled = bool(args.trace)
         t0 = time.perf_counter()
         workload.bootstrap()
         bootstrap_s = time.perf_counter() - t0
-        direct = dict(tracer.totals["lake.merge_direct"])
+        direct = tracer.totals["lake.merge_direct"]
         tracer.reset()
-        setup_s = session_s + statistics.median(rep_s) + bootstrap_s
-        first_call_s = time.perf_counter() - T_START
+        setup_s = time.perf_counter() - T_START
         print(f"perfbench: session {session_s:.2f} s, inputs+oracle "
-              f"{[round(r, 2) for r in rep_s]} s, bootstrap "
-              f"{bootstrap_s:.2f} s", file=sys.stderr)
+              f"{prepare_s:.2f} s, bootstrap {bootstrap_s:.2f} s",
+              file=sys.stderr)
 
         failed = 0
         try:
@@ -231,8 +232,13 @@ def main(argv=None) -> int:
             failed = 1
             errors = [f"engine error: {exc!r}"]
         tracer.enabled = False
+        print("perfbench: batches "
+              f"{[round(r['batch_s'], 2) for r in records]} s, reads "
+              f"{[round(x, 2) for r in records for x in r['read_s']]} s",
+              file=sys.stderr)
         # each batch and each read is one operation
         attempted = sum(1 + len(r["read_s"]) for r in records) + failed
+        reads = [x for r in records for x in r["read_s"]]
 
         if not failed:
             lake_mb = workload.lake_mb()
@@ -242,44 +248,37 @@ def main(argv=None) -> int:
             for e in errors:
                 print(f"perfbench: MISMATCH {e}", file=sys.stderr)
 
+        error_rate = failed / max(attempted, 1)
+        counts = {}
         if args.trace:
-            layer = {}
             if records:
-                layer = tracer.report(rounds, wall, cores)
-                ops = Tracer(spark)
-                ops.enabled = True
-                layer.update(operator_prefixes(spark, workload, ops))
-                for s in OPERATOR_SPANS:
-                    for f in SPAN_FIELDS:
-                        layer[f"{s}.{f}"] = ops.totals[s][f]
+                metrics = tracer.report(rounds, wall, cores)
+                metrics.update(operator_prefixes(spark, workload))
                 for f in SPAN_FIELDS:
-                    layer[f"lake.merge_direct.{f}"] = direct.get(f, 0.0)
-            names = per_layer_names()
-            metrics = {n: float(layer.get(n, 0.0)) for n in names}
-            units = {n: _layer_unit(n) for n in names}
+                    metrics[f"lake.merge_direct.{f}"] = direct[f]
+                metrics["error_rate"] = error_rate
+                metrics = {n: metrics[n] for n in per_layer_names()}
+            else:  # the engine failed before a batch was timed
+                metrics = dict.fromkeys(per_layer_names(), 0.0)
+                metrics["error_rate"] = error_rate
+            units = {n: _layer_unit(n) for n in metrics}
         else:
-            events = sum(r["events"] for r in records)
-            loop_s = sum(r["wall_s"] for r in records)
             metrics = {
                 "setup_s": setup_s,
-                "events_per_s": events / loop_s if loop_s else 0.0,
+                "events_per_s": (sum(r["events"] for r in records) / wall
+                                 if wall else 0.0),
                 "batch_p50_s": _median(r["batch_s"] for r in records),
-                # per batch the median of its repeated reads, then the
-                # median over batches: a stream round mixes a read after
-                # compaction with one that resolves equality deletes
-                "read_p50_s": _median(statistics.median(r["read_s"])
-                                      for r in records),
+                "read_p50_s": _median(reads),
                 "lake_mb_end": lake_mb if records else 0.0,
             }
             units = {"setup_s": "s", "events_per_s": "ev/s",
                      "batch_p50_s": "s", "read_p50_s": "s",
                      "lake_mb_end": "MB"}
-        extra = [("error_rate", failed / max(attempted, 1), "ratio"),
-                 ("batches", len(records), "count"),
-                 ("rounds", rounds, "count"),
-                 ("timed_wall_s", wall, "s"),
-                 ("first_call_s", first_call_s, "s")]
-        print(summary_table(metrics, units, extra))
+            counts = {"batch_p50_s": len(records), "read_p50_s": len(reads)}
+        extra = [] if args.trace else [("error_rate", error_rate, "ratio")]
+        extra += [("rounds", rounds, "count"),
+                  ("timed_wall_s", wall, "s")]
+        print(summary_table(metrics, units, counts, extra))
         print(json.dumps({
             "correct": not errors,
             "attempted": max(attempted, 1),
@@ -305,8 +304,8 @@ def _layer_unit(name: str) -> str:
         return "s"
     if "mb" in field:
         return "MB"
-    if field in ("jobs", "files_live", "eqdel_rows_live", "pending_rows",
-                 "tasks_failed"):
+    if field in ("calls", "jobs", "files_live", "eqdel_rows_live",
+                 "pending_rows", "tasks_failed"):
         return "count"
     return "ratio"
 

@@ -12,9 +12,12 @@ time, shuffle bytes written and failed tasks from the driver's status store.
 Counters are read at span exit because the store keeps only
 ``spark.ui.retainedJobs`` jobs.
 
-Per span the tracer accumulates wall time (inclusive and self), jobs, summed
-executor run time and shuffle bytes written. Job, task and shuffle counters
-are inclusive of child spans, like the wall time.
+Per span the tracer accumulates calls, wall time (inclusive and self), jobs,
+summed executor run time and shuffle bytes written. Job, task and shuffle
+counters are inclusive of child spans, like the wall time. A span the
+workload never enters reads 0 in every field, ``calls`` included, and so do
+the gauges its wrapper records: ``calls`` tells a layer that was not run
+from one that took no time.
 
 Everything the tracer does besides calling the wrapped function (job-group
 switches, status-store reads, gauge probes) is timed as bookkeeping. The
@@ -26,6 +29,7 @@ rest.
 from __future__ import annotations
 
 import functools
+import itertools
 import os
 import statistics
 import time
@@ -36,6 +40,10 @@ import pyarrow.parquet as pq
 from py4j.protocol import Py4JError
 
 MB = 1024 * 1024
+
+# job-group ids are unique across Tracer instances: the status tracker
+# remembers a group's jobs for the whole session
+_GROUP_IDS = itertools.count(1)
 
 # spans recorded inside the timed rounds, by ``install``'s wrappers and the
 # benchmark's own read
@@ -60,7 +68,7 @@ SPAN_NAMES = (
 # timed apart from the rounds, by cumulative prefixes (run.py)
 OPERATOR_SPANS = ("operators.decode", "operators.assembly", "operators.lww")
 
-SPAN_FIELDS = ("s", "self_s", "jobs", "task_s", "shuffle_write_mb")
+SPAN_FIELDS = ("calls", "s", "self_s", "jobs", "task_s", "shuffle_write_mb")
 
 GAUGE_NAMES = (
     "operators.assembly.committed_per_event",
@@ -81,10 +89,11 @@ GAUGE_NAMES = (
 
 
 def per_layer_names() -> list[str]:
-    """Every per-layer metric name, in report order."""
+    """Every per-layer metric name, in report order; the traced run adds
+    its own ``error_rate`` at the end."""
     spans = [f"{s}.{f}" for s in SPAN_NAMES + OPERATOR_SPANS
              for f in SPAN_FIELDS]
-    return spans + list(GAUGE_NAMES)
+    return spans + list(GAUGE_NAMES) + ["error_rate"]
 
 
 def dir_bytes(path: str) -> int:
@@ -106,7 +115,6 @@ class Tracer:
         self.sc = spark.sparkContext
         self._jsc_sc = self.sc._jsc.sc()
         self.enabled = False
-        self._groups = 0
         self.reset()
 
     def reset(self) -> None:
@@ -158,8 +166,7 @@ class Tracer:
         b0 = time.perf_counter()
         parent_group = self.sc.getLocalProperty("spark.jobGroup.id")
         parent_desc = self.sc.getLocalProperty("spark.job.description")
-        self._groups += 1
-        group = f"perfbench-{self._groups}"
+        group = f"perfbench-{next(_GROUP_IDS)}"
         self.sc.setJobGroup(group, name)
         frame = {"child_s": 0.0, "jobs": 0, "task_s": 0.0, "shuffle_mb": 0.0}
         self._stack.append(frame)
@@ -182,6 +189,7 @@ class Tracer:
             task_s += frame["task_s"]
             shuffle_mb += frame["shuffle_mb"]
             t = self.totals[name]
+            t["calls"] += 1
             t["s"] += dt
             t["self_s"] += dt - frame["child_s"]
             t["jobs"] += jobs
@@ -333,15 +341,17 @@ class Tracer:
     def report(self, rounds: int, round_wall_s: float, cores: int) -> dict:
         """Per-layer metrics of the traced rounds: span counters, summed
         gauges and unattributed time per round, sampled gauges as medians.
-        ``round_wall_s`` is the summed wall time of the traced rounds."""
+        ``round_wall_s`` is the summed wall time of the traced rounds. A
+        gauge whose span never ran reads 0, like that span's ``calls``."""
         out: dict[str, float] = {}
         for s in SPAN_NAMES:
             for f in SPAN_FIELDS:
                 out[f"{s}.{f}"] = self.totals[s][f] / rounds
-        for g, values in self.samples.items():
-            out[g] = statistics.median(values)
-        for g, total in self.sums.items():
-            out[g] = total / rounds
+        for g in GAUGE_NAMES:
+            if g in self.samples:
+                out[g] = statistics.median(self.samples[g])
+            else:
+                out[g] = self.sums.get(g, 0.0) / rounds
         out["trace.unattributed_s"] = (round_wall_s - self.top_s) / rounds
         out["spark.core_util"] = self.task_s / (round_wall_s * cores)
         out["spark.tasks_failed"] = float(self.tasks_failed)

@@ -4,17 +4,16 @@ Every workload follows the same shape:
 
 * ``prepare``   generates the change feed from the seed with
                 ``feed.generate_change_events``, writes it as scn-ordered
-                parquet, one file per batch id, and computes the expected
-                final table with ``feed.sequential_oracle``. Repeated to
-                measure set-up time.
+                parquet, one file per batch, and computes the expected
+                final table with ``feed.sequential_oracle``.
 * ``bootstrap`` applies the feed's first slice with the engine and keeps a
                 pristine copy of the resulting state. It is the warm-up too:
                 the first call pays the Python worker fork and codegen.
 * ``run_round`` restores the pristine state and applies the timed batches
-                in order, one at a time, with a full read of the primary
-                table after each batch. Rounds are identical, so the final
-                tables and their size on disk do not depend on how many
-                rounds a run makes.
+                in order, one at a time, with ``READS`` full reads of the
+                primary table after each batch. Rounds are identical, so
+                the final tables and their size on disk do not depend on how
+                many rounds a run makes.
 * ``check``     compares the final tables with the oracle.
 """
 
@@ -22,7 +21,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import statistics
 import time
 
 import numpy as np
@@ -49,7 +47,6 @@ from tracer import MB, dir_bytes
 PAYLOAD_CHARS = 200
 MAX_DML = 8  # the generator's default, needed to re-time its transactions
 TABLE_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-READS = 5  # full reads of the primary after each batch
 
 
 # ------------------------------------------------------------------ inputs
@@ -196,6 +193,7 @@ def read_full(spark, table: LakeTable) -> None:
 class Workload:
     name = ""
     BOOT_BATCHES = 1  # leading batch files the bootstrap applies
+    READS = 3  # full reads of the primary after each batch
 
     def __init__(self, spark, seed: int, work_dir: str):
         self.spark = spark
@@ -205,22 +203,17 @@ class Workload:
         self.pristine = os.path.join(work_dir, "pristine")
         self.batches: list[dict] = []
         self.expected: pd.DataFrame | None = None
-        self.inputs_dir = ""
 
     # set-up ------------------------------------------------------------
 
-    def prepare(self, rep: int) -> None:
-        """Generate inputs and oracle into a fresh directory; the last
-        call's inputs feed the timed rounds."""
-        old = self.inputs_dir
-        self.inputs_dir = os.path.join(self.work, f"inputs{rep}")
+    def prepare(self) -> None:
+        """Generate the batch files and the oracle's final table."""
         feed, cuts = self.make_feed()
-        self.batches = write_batches(feed, cuts, self.inputs_dir)
+        self.batches = write_batches(feed, cuts,
+                                     os.path.join(self.work, "inputs"))
         # rows past the last cut are never applied: the oracle sees only the
         # applied prefix (its still-open transactions commit nothing)
         self.expected = oracle_frame(feed.slice(0, cuts[-1]))
-        if old:
-            shutil.rmtree(old, ignore_errors=True)
 
     def batch_df(self, b: int):
         return self.spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(
@@ -242,9 +235,7 @@ class Workload:
 
     def run_round(self, tracer) -> list[dict]:
         """Apply the batches after the bootstrap's, each followed by READS
-        full reads of the primary. Returns one record per batch; its
-        ``wall_s`` counts the apply and the median read, as one pass of the
-        closed loop."""
+        full reads of the primary. Returns one record per batch."""
         records = []
         for b in range(self.BOOT_BATCHES, len(self.batches)):
             t0 = time.perf_counter()
@@ -258,14 +249,13 @@ class Workload:
                         int(f["rows"]) for f in files
                         if f.get("content") == "eq-del"))
             reads = []
-            for _ in range(READS):
+            for _ in range(self.READS):
                 t0 = time.perf_counter()
                 with tracer.span("lake.read"):
                     read_full(self.spark, self.primary)
                 reads.append(time.perf_counter() - t0)
             records.append({"events": self.batches[b]["events"],
-                            "batch_s": batch_s, "read_s": reads,
-                            "wall_s": batch_s + statistics.median(reads)})
+                            "batch_s": batch_s, "read_s": reads})
         return records
 
     def lake_mb(self) -> float:
@@ -298,9 +288,9 @@ class MergeIncremental(Workload):
     copy-on-write target, through ``replay_batch`` with rising batch ids."""
 
     name = "merge_incremental"
-    BOOT_TXS = 4_000
+    BOOT_TXS = 2_500
     BATCH_TXS = 500
-    BATCHES = 4
+    BATCHES = 3
     BOOT_BATCHES = 2
     N_CONVS = 1_000
 
@@ -343,12 +333,16 @@ class StreamMicrobatch(Workload):
     STREAMS = 600
     TXS_PER_STREAM = 5
     N_CONVS = 1_000
-    BOOT_SHARE = 0.4
+    BOOT_SHARE = 0.25
     BATCH_SHARE = 0.12
-    BATCHES = 1
+    # a read of the compacted primary takes about 0.2 s, so one batch needs
+    # more of them for a steady median
+    READS = 9
 
     # a compaction and expiry cycle of one batch, so every round is a whole
-    # cycle; one bucket per core, as the tables hold about 10k rows
+    # cycle: the set-up and one streaming batch already take most of a
+    # run's time budget. One bucket per core, as the tables hold fewer than
+    # 10k rows.
     cfg = EngineConfig(merge_mode="mor", compact_every=1, expire_every=1,
                        num_buckets=4)
 
@@ -360,7 +354,7 @@ class StreamMicrobatch(Workload):
         # the feed runs on past the last timed file, so the last batch also
         # leaves transactions open in the pending store
         return feed, even_cuts(feed.num_rows, [self.BOOT_SHARE]
-                               + [self.BATCH_SHARE] * self.BATCHES)
+                               + [self.BATCH_SHARE])
 
     def _paths(self):
         j = os.path.join
@@ -374,7 +368,7 @@ class StreamMicrobatch(Workload):
         bootstrap_scd2_target(hist, self.cfg)
         bootstrap_conversations_target(conv, self.cfg)
         self.open_tables()
-        self.pipeline.process_batch(self.batch_df(0), 0)
+        self.apply(0)
 
     def open_tables(self):
         prim, hist, conv, state, changes = self._paths()
