@@ -542,9 +542,9 @@ def _merge_slice(
     stage_dir = os.path.join(table.path, "_staging", f"b{composite}")
     # the scn-range audit rides the staging write via observe() — no extra job
     obs = Observation(f"rng_b{composite}")
+    staged = updates_raw.withColumn(_BUCKET_COL, table.bucket_expr())
     (
-        updates_raw.withColumn(_BUCKET_COL, table.bucket_expr())
-        .observe(
+        staged.observe(
             obs,
             F.min("_scn_lo").alias("lo"),
             F.max("_scn_hi").alias("hi"),
@@ -566,7 +566,10 @@ def _merge_slice(
         _commit_watermark(table, composite,
                           {"operation": "noop", "batch_id": composite})
         return None
-    updates = spark.read.parquet(stage_dir)
+    # read back with the schema the write had: inferring it would run a
+    # one-task footer-scan job on every staged merge. The bucket partition
+    # column is last on both sides.
+    updates = spark.read.schema(staged.schema).parquet(stage_dir)
     try:
         if rng["n"] == 0:
             # advance the write-audit watermark so retries stay idempotent

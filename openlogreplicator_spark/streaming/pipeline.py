@@ -14,22 +14,59 @@ Reference parity (the online entry point, OracleAnalyzerOnline + Writer):
   * perf trace               -> per-batch, per-source-partition lineage rows
                                 (scn range -> snapshot id) + ingest metrics
 
+Ordering contract of one batch b (process_batch). Like the reference's
+writer thread, which drains committed transactions while the analyzer keeps
+parsing (Writer.cpp:182-323), the independent writes of a batch overlap:
+
+  1. in order, on the caller's thread: decode, DDL preflight, the lineage
+     and control probe, the pending read v(<b), assembly (persisted);
+  2. the pending write v(b). It scans every cached partition, so the
+     assembled frame is built exactly once, before any consumer reads it;
+  3. three branches on threads that keep the caller's Spark local
+     properties and job tags (job group, streaming query ids), each going
+     through the tables in table order:
+       P  primary MERGE -> conversations rollup -> signature index (the
+          view reads the post-merge primary, the index reads the view);
+       H  SCD2 history -> open-version store;
+       S  change stream (changes/[table/]batch_b, overwritten whole);
+     steps inside a branch are ordered, the branches overlap;
+  4. fan-in: wait until every branch has settled, then raise the first
+     failure in P, H, S order;
+  5. only after a clean fan-in: compaction, expiry, the lineage append and
+     the shutdown flag.
+
 Kill-and-resume: on restart Structured Streaming replays the last uncommitted
-batch with the same batch_id and file set; the target merge is skipped by the
-snapshot write-audit if it already landed, and pending state is recomputed
-deterministically from version batch_id-1 — no duplicates, no loss.
+batch with the same batch_id and file set, and any subset of the writes of
+steps 2-3 may already have landed. Each is idempotent under that replay:
+
+  * history before primary (or the reverse): every lake table keeps its
+    own snapshot write-audit, so a replay skips exactly the merges that
+    landed and applies the rest;
+  * pending v(b) before primary: the replay reads ``read_for_batch(< b)``,
+    never its own v(b), and recomputes the same open set from v(b-1),
+    which the write of v(b) keeps;
+  * change stream before primary: the batch directory is overwritten
+    whole, with the same bytes;
+  * nothing of step 5 happens for a failed batch: no lineage row, and
+    compaction and expiry are deferred (correctness never depends on them).
+
+No duplicates, no loss.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from openlogreplicator_spark.config import EngineConfig
 from openlogreplicator_spark.feed import CHANGE_EVENT_SCHEMA
-from openlogreplicator_spark.lake import LakeTable
+from openlogreplicator_spark.lake import LakeTable, _fsync_dir
 from openlogreplicator_spark.operators.decode import decode_events
 from openlogreplicator_spark.plans.replay import (
     apply_committed,
@@ -42,6 +79,31 @@ LINEAGE_COLS = [
     "batch_id", "partition_id", "scn_min", "scn_max", "events",
     "snapshot_id", "rows_merged", "wall_ms", "ts_max_us",
 ]
+LINEAGE_SCHEMA = pa.schema([
+    (c, pa.int32() if c == "partition_id" else pa.int64())
+    for c in LINEAGE_COLS
+])
+
+
+def _run_branches(spark: SparkSession, branches: list) -> list:
+    """Run each callable on its own thread and return their results in
+    order. Every branch settles before the first failure (in list order) is
+    raised, so a failed batch never leaves a branch running; later failures
+    are logged. The threads inherit the caller's Spark local properties and
+    job tags."""
+    import logging
+    from concurrent.futures import ThreadPoolExecutor
+
+    wrap = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futures = [pool.submit(wrap(b)) for b in branches]
+    failed = [f.exception() for f in futures if f.exception() is not None]
+    for exc in failed[1:]:
+        logging.getLogger(__name__).error(
+            "another branch of the batch failed too", exc_info=exc)
+    if failed:
+        raise failed[0]
+    return [f.result() for f in futures]
 
 
 class CDCStreamPipeline:
@@ -274,62 +336,178 @@ class CDCStreamPipeline:
                         "conversations rollup view; renaming or dropping "
                         "them would silently change the view's contract.")
 
-    def _apply_side_outputs(self, spark, committed: DataFrame,
-                            table: LakeTable, tname, ddls: list,
-                            batch_id: int, summaries: list) -> None:
-        """Maintain this table's configured side outputs for one batch,
-        AFTER its primary merge (rollups read post-merge state). Column DDL
-        the primary applied this batch reaches the history + open store
-        through the SAME scn-sliced interleaving the primary merge used
-        (apply_scd2_batch_sliced), so pre-DDL events of the DDL's own batch
-        land under the pre-DDL schema on both sides — identical
-        initial-default and rename semantics, no divergence."""
-        hist = self.history_tables.get(tname)
-        open_t = self.history_open_tables.get(tname)
-        conv = self.conversations_tables.get(tname)
-        if conv is not None:
-            from openlogreplicator_spark.plans.rollup_apply import (
-                apply_conv_rollup_batch,
-            )
-
-            summaries.append(apply_conv_rollup_batch(
-                spark, committed.select("conv_id"), table, conv, self.cfg,
-                batch_id,
-            ))
-            sig = self.sig_index_tables.get(tname)
-            if sig is not None:
-                from openlogreplicator_spark.plans.dedup_index import (
-                    apply_sig_index_batch,
+    def _run_primary_branch(self, spark, parts: list, batch_id: int) -> dict:
+        """Branch P: per table, the primary MERGE, then the conversations
+        rollup (it reads the post-merge primary), then the signature index
+        (it reads the post-rollup view). Returns {table name: summaries}."""
+        out = {}
+        for name, tbl, part, tddls in parts:
+            summaries = apply_committed(
+                spark, part, tddls, tbl, self.cfg, batch_id)
+            conv = self.conversations_tables.get(name)
+            if conv is not None:
+                from openlogreplicator_spark.plans.rollup_apply import (
+                    apply_conv_rollup_batch,
                 )
 
-                # after the rollup: signatures read the post-rollup view
-                summaries.append(apply_sig_index_batch(
-                    spark, committed.select("conv_id"), conv, sig, self.cfg,
+                summaries.append(apply_conv_rollup_batch(
+                    spark, part.select("conv_id"), tbl, conv, self.cfg,
                     batch_id,
                 ))
-        if hist is not None:
-            from openlogreplicator_spark.plans.scd2_apply import (
-                apply_scd2_batch_sliced,
-            )
+                sig = self.sig_index_tables.get(name)
+                if sig is not None:
+                    from openlogreplicator_spark.plans.dedup_index import (
+                        apply_sig_index_batch,
+                    )
 
-            summaries.extend(apply_scd2_batch_sliced(
-                spark, committed, ddls, hist, self.cfg, batch_id,
-                key_cols=tuple(table.key_cols), open_table=open_t,
-            ))
+                    summaries.append(apply_sig_index_batch(
+                        spark, part.select("conv_id"), conv, sig, self.cfg,
+                        batch_id,
+                    ))
+            out[name] = summaries
+        return out
+
+    def _history_branch(self, spark, parts: list, batch_id: int):
+        """Branch H: per table, the SCD2 history and its open-version store;
+        returns the branch's callable, whose result is {table name:
+        summaries}. Column DDL the primary applies this batch reaches them
+        through the SAME scn-sliced interleaving the primary merge uses
+        (apply_scd2_batch_sliced), so pre-DDL events of the DDL's own batch
+        land under the pre-DDL schema on both sides. The primary's key
+        columns are read here, before the fan-out: the branch itself never
+        touches the primary."""
+        from openlogreplicator_spark.plans.scd2_apply import (
+            apply_scd2_batch_sliced,
+        )
+
+        work = [
+            (name, part, tddls, self.history_tables[name],
+             self.history_open_tables.get(name), tuple(tbl.key_cols))
+            for name, tbl, part, tddls in parts
+            if name in self.history_tables
+        ]
+
+        def apply() -> dict:
+            return {
+                name: apply_scd2_batch_sliced(
+                    spark, part, tddls, hist, self.cfg, batch_id,
+                    key_cols=key_cols, open_table=open_t,
+                )
+                for name, part, tddls, hist, open_t, key_cols in work
+            }
+
+        return apply
+
+    def _change_stream_branch(self, parts: list, batch_id: int):
+        """Branch S: serialize each table's slice of the batch and overwrite
+        its ``batch_<id>`` directory; returns the branch's callable. What it
+        reads from the lake (the schemas it advertises, the key columns) is
+        read here, before the fan-out: the callable only serializes and
+        writes.
+
+        With the schema knob off: one map-only pass per table. With it on
+        and no DDL in the batch: one pass, columns from the live manifest.
+        With mid-batch DDL: one sub-frame per ddl_slice_bounds range, each
+        advertising the schema in force at its commit scns (batch-start
+        schema evolved forward per DDL — the same boundaries the primary
+        and SCD2 applies slice on), unioned into the batch file."""
+        from openlogreplicator_spark.plans.replay import (
+            ddl_slice_bounds,
+            evolve_schema,
+            slice_by_scn,
+        )
+
+        per_op = self.change_stream_message_mode == "op"
+        if self.change_stream_format == "protobuf":
+            from openlogreplicator_spark.sinks import (
+                protobuf_stream_messages,
+                protobuf_stream_ops,
+                write_protobuf_stream as _write,
+            )
+            from openlogreplicator_spark.sinks.protobuf_stream import (
+                schema_columns_for as _schema_cols,
+            )
+            _messages = (protobuf_stream_ops if per_op
+                         else protobuf_stream_messages)
+        else:
+            from openlogreplicator_spark.sinks import (
+                change_stream_brackets,
+                change_stream_messages,
+                write_change_stream as _write,
+            )
+            from openlogreplicator_spark.sinks.json_stream import (
+                json_schema_columns_for as _schema_cols,
+            )
+            _messages = (change_stream_brackets if per_op
+                         else change_stream_messages)
+        _kw = {"fmt": self.change_stream_fmt}
+        if not per_op and self.change_stream_max_ops:
+            _kw["max_ops_per_message"] = self.change_stream_max_ops
+        # SCHEMA_FORMAT_FULL (bit0): advertise, per DDL-scn slice, the
+        # schema in force at each op's commit scn (wire parity with the
+        # scn-sliced primary apply; the reference re-emits the new schema
+        # only from the DDL boundary onward)
+        with_schema = (self.change_stream_fmt is not None and getattr(
+            self.change_stream_fmt, "schema_format", 0) & 1)
+
+        work = []
+        for name, tbl, part, tddls in parts:
+            tddls = sorted(tddls)
+            if not with_schema:
+                slices = [((None, None), None)]
+            elif not tddls:
+                slices = [((None, None), tbl.schema())]
+            else:
+                # schema_before_batch, not schema(): on a REPLAYED batch the
+                # live schema already carries this batch's DDLs, and the
+                # re-serialized pre-DDL slices must advertise the same
+                # column lists the original write did (byte-identical)
+                sch = tbl.schema_before_batch(batch_id)
+                slices = []
+                for sub, bounds in enumerate(ddl_slice_bounds(tddls)):
+                    if sub > 0:
+                        sch = evolve_schema(sch, tddls[sub - 1][1],
+                                            tbl.key_cols)
+                    slices.append((bounds, sch))
+            # routed mode: each table's messages carry ITS key columns
+            # (per-table key overrides), in a per-table subdir
+            kc, sub_dir = (({}, "") if name is None
+                           else ({"key_cols": tuple(tbl.key_cols)}, name))
+            path = os.path.join(self.change_stream_dir, sub_dir,
+                                f"batch_{batch_id}")
+            work.append((part, kc, slices, path))
+
+        def write() -> dict:
+            for part, kc, slices, path in work:
+                out = None
+                for (lo, hi), sch in slices:
+                    kw = (_kw if sch is None
+                          else dict(_kw, schema_columns=_schema_cols(sch)))
+                    f = _messages(slice_by_scn(part, lo, hi), self.cfg,
+                                  **kc, **kw)
+                    out = f if out is None else out.unionByName(f)
+                _write(out, path)
+            return {}  # a sink has no lake summaries
+
+        return write
 
     # ------------------------------------------------------------- per batch
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> list[dict]:
-        """foreachBatch body. Deterministic + idempotent per (batch_id, input)."""
+        """foreachBatch body. Deterministic + idempotent per (batch_id,
+        input). The order of its steps, and which of them overlap, is the
+        module docstring's ordering contract."""
         t0 = time.time()
         spark = batch_df.sparkSession
+        # single-table mode is the routed flow over one table named None
+        targets = (self.tables if self.tables is not None
+                   else {None: self.table})
         # pre-batch snapshot versions (pointer reads): the retention
         # cadence below must keep at least this batch's own commits PLUS
         # the pre-batch snapshot, or a crash-before-checkpoint replay of a
         # DDL-carrying batch loses the manifest schema_before_batch needs
         # for byte-identical change-stream re-serialization
-        _primaries = (list(self.tables.values())
-                      if self.tables is not None else [self.table])
+        _primaries = list(targets.values())
         _v_start = [t.current_version() for t in _primaries]
         if self.tables is not None:
             from openlogreplicator_spark.operators.decode import (
@@ -341,14 +519,12 @@ class CDCStreamPipeline:
 
             decoded = decode_events_multi(batch_df, self.tables, self.cfg)
             ddls_by_table = collect_ddls_by_table(decoded)
-            ddls = []  # single-table slicing not used on the multi path
-            for name in self.tables:
-                self._preflight_side_output_ddls(
-                    ddls_by_table.get(name, []), name, self.tables[name])
         else:
             decoded = decode_events(batch_df, self.cfg)
-            ddls = collect_ddls(decoded)
-            self._preflight_side_output_ddls(ddls, None, self.table)
+            ddls_by_table = {None: collect_ddls(decoded)}
+        for name, tbl in targets.items():
+            self._preflight_side_output_ddls(
+                ddls_by_table.get(name, []), name, tbl)
         # control-table events drive the M4 shutdown probe only — they must
         # NOT reach assembly (a '_control' begin would sit in the pending
         # open-transaction store forever, re-delivered into every batch)
@@ -412,138 +588,42 @@ class CDCStreamPipeline:
             res.where(~F.col("is_open")).drop("is_open"))
         open_rows = res.where(F.col("is_open"))
 
-        # SCHEMA_FORMAT_FULL (bit0): capture each target's schema BEFORE
-        # this batch's DDLs apply, so the change stream can advertise, per
-        # DDL-scn slice, the schema in force at each op's commit scn (wire
-        # parity with the scn-sliced primary apply; the reference re-emits
-        # the new schema only from the DDL boundary onward).
-        _schema_cols = None
-        pre_schemas: dict = {}
-        if (self.change_stream_dir is not None
-                and self.change_stream_fmt is not None
-                and getattr(self.change_stream_fmt,
-                            "schema_format", 0) & 1):
-            if self.change_stream_format == "protobuf":
-                from openlogreplicator_spark.sinks.protobuf_stream import (
-                    schema_columns_for as _schema_cols,
-                )
-            else:
-                from openlogreplicator_spark.sinks.json_stream import (
-                    json_schema_columns_for as _schema_cols,
-                )
-            # schema_before_batch, not schema(): on a REPLAYED batch the
-            # live schema already carries this batch's DDLs, and the
-            # re-serialized pre-DDL slices must advertise the same column
-            # lists the original write did (byte-identical replay)
-            if self.tables is not None:
-                pre_schemas = {n: t.schema_before_batch(batch_id)
-                               for n, t in self.tables.items()}
-            else:
-                pre_schemas = {None: self.table.schema_before_batch(
-                    batch_id)}
-
+        # routed mode gives each table its own slice of the batch
+        parts = [
+            (name, tbl,
+             committed if name is None
+             else committed.where(F.col("table") == name),
+             ddls_by_table.get(name, []))
+            for name, tbl in targets.items()
+        ]
         try:
-            if self.tables is not None:
-                summaries = []
-                for name, tbl in self.tables.items():
-                    part = committed.where(F.col("table") == name)
-                    tddls = ddls_by_table.get(name, [])
-                    summaries += apply_committed(
-                        spark, part, tddls, tbl, self.cfg, batch_id,
-                    )
-                    self._apply_side_outputs(
-                        spark, part, tbl, name, tddls, batch_id, summaries)
-            else:
-                summaries = apply_committed(
-                    spark, committed, ddls, self.table, self.cfg, batch_id
-                )
-                self._apply_side_outputs(
-                    spark, committed, self.table, None, ddls, batch_id,
-                    summaries)
-            if self.change_stream_dir is not None:
-                per_op = self.change_stream_message_mode == "op"
-                if self.change_stream_format == "protobuf":
-                    from openlogreplicator_spark.sinks import (
-                        protobuf_stream_messages,
-                        protobuf_stream_ops,
-                        write_protobuf_stream as _write,
-                    )
-                    _messages = (protobuf_stream_ops if per_op
-                                 else protobuf_stream_messages)
-                else:
-                    from openlogreplicator_spark.sinks import (
-                        change_stream_brackets,
-                        change_stream_messages,
-                        write_change_stream as _write,
-                    )
-                    _messages = (change_stream_brackets if per_op
-                                 else change_stream_messages)
-                _kw = {"fmt": self.change_stream_fmt}
-                if not per_op and self.change_stream_max_ops:
-                    _kw["max_ops_per_message"] = self.change_stream_max_ops
-
-                def _msgs_for(part, tbl, name, tddls, **kc):
-                    """Serialize one table's slice of the batch. With the
-                    schema knob off: one map-only pass. With it on and no
-                    DDL in the batch: one pass, columns from the live
-                    manifest. With mid-batch DDL: one sub-frame per
-                    ddl_slice_bounds range, each advertising the schema in
-                    force at its commit scns (batch-start schema evolved
-                    forward per DDL — the same boundaries the primary and
-                    SCD2 applies slice on), unioned into the batch file."""
-                    if _schema_cols is None:
-                        return _messages(part, self.cfg, **kc, **_kw)
-                    tddls = sorted(tddls)
-                    if not tddls:
-                        kw = dict(_kw,
-                                  schema_columns=_schema_cols(tbl.schema()))
-                        return _messages(part, self.cfg, **kc, **kw)
-                    from openlogreplicator_spark.plans.replay import (
-                        ddl_slice_bounds,
-                        evolve_schema,
-                        slice_by_scn,
-                    )
-                    sch = pre_schemas[name]
-                    out = None
-                    for sub, (lo, hi) in enumerate(ddl_slice_bounds(tddls)):
-                        if sub > 0:
-                            sch = evolve_schema(sch, tddls[sub - 1][1],
-                                                tbl.key_cols)
-                        kw = dict(_kw, schema_columns=_schema_cols(sch))
-                        f = _messages(slice_by_scn(part, lo, hi),
-                                      self.cfg, **kc, **kw)
-                        out = f if out is None else out.unionByName(f)
-                    return out
-
-                if self.tables is not None:
-                    # per-table serialization: each table's messages carry
-                    # ITS key columns (per-table key overrides), in a
-                    # per-table subdir
-                    for name, tbl in self.tables.items():
-                        _write(
-                            _msgs_for(
-                                committed.where(F.col("table") == name),
-                                tbl, name, ddls_by_table.get(name, []),
-                                key_cols=tuple(tbl.key_cols),
-                            ),
-                            os.path.join(self.change_stream_dir, name,
-                                         f"batch_{batch_id}"),
-                        )
-                else:
-                    _write(
-                        _msgs_for(committed, self.table, None, ddls),
-                        os.path.join(self.change_stream_dir,
-                                     f"batch_{batch_id}"),
-                    )
-            # persist still-open transactions for the next microbatch
-            # (reads the SAME cached frame as the committed splits above)
+            # persist still-open transactions for the next microbatch. It
+            # runs first because it scans every cached partition: the
+            # assembled frame is built once, here, and the branches below
+            # only read the cache
             self.pending.write(
                 open_rows.select(
                     *[f.name for f in CHANGE_EVENT_SCHEMA.fields]),
                 batch_id,
             )
+            branches = [
+                lambda: self._run_primary_branch(spark, parts, batch_id)]
+            if self.history_tables:
+                branches.append(self._history_branch(spark, parts, batch_id))
+            if self.change_stream_dir is not None:
+                branches.append(self._change_stream_branch(parts, batch_id))
+            outs = _run_branches(spark, branches)
         finally:
             res.unpersist()
+        # per table: primary, view and index, then history
+        summaries = [s for name in targets for out in outs
+                     for s in out.get(name, [])]
+        side = [
+            *self.history_tables.values(),
+            *self.history_open_tables.values(),
+            *self.conversations_tables.values(),
+            *self.sig_index_tables.values(),
+        ]
 
         # merge-on-read maintenance cadence: every N committed batches, fold
         # delete files / stacked generations back into plain data files.
@@ -554,17 +634,8 @@ class CDCStreamPipeline:
         # equality-delete files every microbatch and depends on periodic
         # folding exactly like the primary (round-5 review finding: both
         # branches only walked the primaries)
-        _maint_tables = (
-            list(self.tables.values()) if self.tables is not None
-            else [self.table]
-        ) + [
-            *self.history_tables.values(),
-            *self.history_open_tables.values(),
-            *self.conversations_tables.values(),
-            *self.sig_index_tables.values(),
-        ]
         if self.cfg.compact_every and (batch_id + 1) % self.cfg.compact_every == 0:
-            for tbl in _maint_tables:
+            for tbl in _primaries + side:
                 summaries.append(tbl.compact(
                     spark, summary={"trigger_batch": int(batch_id)}))
         else:
@@ -572,7 +643,7 @@ class CDCStreamPipeline:
             # fold any MoR bucket whose stacked delete rows crossed the
             # table's thresholds — manifest-only check, no data I/O when
             # nothing qualifies
-            for tbl in _maint_tables:
+            for tbl in _primaries + side:
                 if tbl.write_mode != "mor":
                     continue
                 cands = tbl.compaction_candidates()
@@ -591,12 +662,6 @@ class CDCStreamPipeline:
         # never depends on it) and run AFTER this batch's merges so
         # keep_last always retains the snapshot just written.
         if self.cfg.expire_every and (batch_id + 1) % self.cfg.expire_every == 0:
-            side = [
-                *self.history_tables.values(),
-                *self.history_open_tables.values(),
-                *self.conversations_tables.values(),
-                *self.sig_index_tables.values(),
-            ]
             for i, tbl in enumerate(_primaries + side):
                 keep = self.cfg.expire_keep
                 if i < len(_primaries):
@@ -608,7 +673,7 @@ class CDCStreamPipeline:
                 s["trigger_batch"] = int(batch_id)
                 summaries.append(s)
 
-        self._write_lineage(spark, batch_id, part_stats, summaries,
+        self._write_lineage(batch_id, part_stats, summaries,
                             wall_ms=int((time.time() - t0) * 1000))
         if ctl_seen:
             # flag only AFTER the batch fully applied: the poller in
@@ -617,7 +682,7 @@ class CDCStreamPipeline:
             self.shutdown_requested = True
         return summaries
 
-    def _write_lineage(self, spark, batch_id, part_stats, summaries, wall_ms):
+    def _write_lineage(self, batch_id, part_stats, summaries, wall_ms):
         snap = max(
             (s.get("snapshot_id", -1) for s in summaries if not s.get("skipped")),
             default=-1,
@@ -632,15 +697,22 @@ class CDCStreamPipeline:
              int(p["ts_max_us"]) if p["ts_max_us"] is not None else -1)
             for p in part_stats
         ] or [(int(batch_id), -1, -1, -1, 0, int(snap), 0, int(wall_ms), -1)]
-        df = spark.createDataFrame(
-            rows,
-            "batch_id long, partition_id int, scn_min long, scn_max long,"
-            "events long, snapshot_id long, rows_merged long, wall_ms long,"
-            "ts_max_us long",
-        )
+        table = pa.Table.from_pylist(
+            [dict(zip(LINEAGE_COLS, r)) for r in rows], schema=LINEAGE_SCHEMA)
         # append-only; a replayed batch appends again -> readers dedup on
-        # (batch_id, partition_id) keeping the latest write (see read_lineage)
-        df.coalesce(1).write.mode("append").parquet(self.lineage_dir)
+        # (batch_id, partition_id) keeping the latest write (see read_lineage).
+        # A few rows need no Spark job: write a dot-prefixed file (readers
+        # skip it), rename it into place and make the rename durable
+        os.makedirs(self.lineage_dir, exist_ok=True)
+        name = f"part-{int(batch_id):08d}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.lineage_dir, f".{name}")
+        with open(tmp, "wb") as f:
+            pq.write_table(table, f)
+            f.flush()
+            os.fsync(f.fileno())
+        path = os.path.join(self.lineage_dir, name)
+        os.replace(tmp, path)
+        _fsync_dir(path)
 
     def read_lineage(self, spark) -> DataFrame:
         if not os.path.exists(self.lineage_dir):
